@@ -82,17 +82,17 @@ class _UserSessionStats:
 
     @staticmethod
     def _column_indexes(names) -> tuple[int, int]:
-        """(user_ix, time_ix) by FIELD NAME, not position: a caller
-        reordering the TABLE-argument SELECT must not silently swap
-        user and time (r15 verdict hardening).  The user column is
-        ``user_id`` (fallback: first column); the time column is
-        ``us``/``ts`` when present, else the first non-user column."""
-        user_ix = names.index("user_id") if "user_id" in names else 0
-        for cand in ("us", "ts"):
-            if cand in names and names.index(cand) != user_ix:
-                return user_ix, names.index(cand)
-        time_ix = next(i for i in range(len(names)) if i != user_ix)
-        return user_ix, time_ix
+        """(user_ix, time_ix) by FIELD NAME, not position, so a caller
+        reordering the TABLE-argument SELECT cannot silently swap user
+        and time.  Requires ``user_id`` plus ``us`` (preferred) or
+        ``ts``; anything else raises ``ValueError``."""
+        names = list(names)
+        time_col = next((c for c in ("us", "ts") if c in names), None)
+        if "user_id" not in names or time_col is None:
+            raise ValueError(
+                f"user_session_stats needs columns user_id and us or ts; got {names}"
+            )
+        return names.index("user_id"), names.index(time_col)
 
     def eval(self, batch: pa.RecordBatch):  # noqa: ANN201
         import numpy as np

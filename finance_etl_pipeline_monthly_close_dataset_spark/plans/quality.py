@@ -425,23 +425,12 @@ def add_severity(dq_exceptions: DataFrame) -> DataFrame:
     return dq_exceptions.withColumn("severity", severity)
 
 
-def dq_overall_status(dq_exceptions: DataFrame, fail_on: str = "ERROR") -> str:
-    """PASS/FAIL gate (Q15, reference quality.py:186-202)."""
-    fail_on = (fail_on or "ERROR").upper()
-    if fail_on == "NEVER":
-        return "PASS"
-    has_any = dq_exceptions.limit(1).count() > 0
-    if not has_any:
-        return "PASS"
-    if fail_on == "WARN":
-        return "FAIL"
-    has_error = dq_exceptions.filter(F.col("severity") == "ERROR").limit(1).count() > 0
-    return "FAIL" if has_error else "PASS"
-
-
 def dq_summary_table(dq_exceptions: DataFrame, fail_on: str = "ERROR") -> DataFrame:
     """Per-dataset summary with a zero-filled scaffold of all five
-    datasets and a status column (Q16, reference quality.py:205-249)."""
+    datasets and a status column (Q16, reference quality.py:205-249).
+
+    The statuses are also the close's PASS/FAIL gate (Q15, reference
+    quality.py:186-202): the gate fails iff some row is ``FAIL``."""
     fail_on = (fail_on or "ERROR").upper()
     spark = dq_exceptions.sparkSession
     # scaffold preserves the reference's DATASETS ordering (sales first;

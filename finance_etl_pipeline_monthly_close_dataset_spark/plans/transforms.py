@@ -28,7 +28,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.datetime_fns import month_end_date, month_str
 from ..functions.money import money_round
@@ -267,16 +266,16 @@ def kpi_monthly(fact: DataFrame, dim_accounts: DataFrame) -> DataFrame:
     bounded tiny domain (6 values), so discovering them is a cheap
     aggregate, and passing them explicitly keeps the pivot single-pass.
 
-    Scale shape (r11): the fact input is scanned ONCE.  A pre-aggregate
-    to (entity, month, account_type) -- exact decimal partial sums with
+    Scale shape: the fact input is scanned ONCE.  A pre-aggregate to
+    (entity, month, account_type) -- exact decimal partial sums with
     map-side combine, so the shuffle carries ~groups-per-partition
-    partial rows, not fact rows -- is locally checkpointed (it is
-    dimension-bounded: entities x months x <=6 account types), and the
-    observed-type discovery, the pivot, and the null-only-group
-    recovery all read that tiny table.  Previously each of the three
-    ran its own full pass over the fact input, which made the KPI stage
-    super-linear at the 10/50/100M close stress (5.0 -> 17.0 -> 42.0 s
-    -- three competing full scans; judge r10 ask #2).
+    partial rows, not fact rows -- is collected to the driver (it is
+    dimension-bounded: entities x months x <=6 account types) and
+    re-based as a local relation; the observed-type discovery, the
+    pivot and the null-only-group recovery all read those rows, and no
+    cache outlives the call.  When each of the three ran its own full
+    pass over the fact input, the KPI stage was super-linear at the
+    10/50/100M close stress (5.0 -> 17.0 -> 42.0 s).
     """
     dim = F.broadcast(dim_accounts.select("account_code", "account_type"))
     joined = (
@@ -289,27 +288,15 @@ def kpi_monthly(fact: DataFrame, dim_accounts: DataFrame) -> DataFrame:
     # is order-independent (identical on any partitioning/merge order,
     # and bit-equal to a serial pandas/DuckDB sum); the double cast
     # happens once, after ALL decimal adds (pre-aggregate + pivot).
-    # persist + count (NOT localCheckpoint): both give the same
-    # eager single-scan behavior, but checkpoint blocks live only on
-    # executors -- on a real cluster an executor loss (spot nodes,
-    # dynamic allocation) makes them unrecoverable and fails the job,
-    # while a persisted DF recomputes the lost partitions from lineage
-    # (ADVICE r11).  MEMORY_AND_DISK: the pre-aggregate is
-    # dimension-bounded (entities x months x <=6 types) so it stays in
-    # memory; disk is the degrade path, not the plan.
-    pre = joined.groupBy("entity", "month", "account_type").agg(
-        F.sum(F.col("amount_base").cast("decimal(28,2)")).alias("_sum_base")
+    pre_rows = (
+        joined.groupBy("entity", "month", "account_type")
+        .agg(F.sum(F.col("amount_base").cast("decimal(28,2)")).alias("_sum_base"))
+        .toArrow()
     )
-    pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-    pre.count()
-
-    observed_types = sorted(
-        r[0]
-        for r in pre.select("account_type")
-        .filter(F.col("account_type").isNotNull())
-        .distinct()
-        .collect()
-    )
+    observed_types = sorted(set(pre_rows.column("account_type").drop_null().to_pylist()))
+    # an Arrow table becomes a LocalRelation; a list of Rows would become
+    # a Python-worker RDD, measured ~1 s per job at 4 cores vs ~0.2 s
+    pre = fact.sparkSession.createDataFrame(pre_rows)
 
     wide = (
         pre.filter(F.col("account_type").isNotNull())

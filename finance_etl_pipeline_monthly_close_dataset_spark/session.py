@@ -20,6 +20,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def graft_cpus() -> int | None:
+    """The core count in ``SPARK_GRAFT_CPUS``; ``None`` when unset or empty.
+
+    Raises ``ValueError`` for a value that is not an integer >= 1."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    if not raw:
+        return None
+    cpus = int(raw) if raw.isdecimal() else 0
+    if cpus < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be an integer >= 1, got {raw!r}")
+    return cpus
+
+
 def get_spark(
     app_name: str = "finance-etl-spark",
     master: str | None = None,
@@ -28,16 +41,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``shuffle_partitions`` defaults to the local core count; on a real
-    cluster you would size it to ~2-3x total executor cores, or simply
-    rely on AQE coalescing from a higher initial number.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (``local[*]``
+    when unset) and ``shuffle_partitions`` to the same count (32 when
+    unset); on a real cluster you would size it to ~2-3x total executor
+    cores, or simply rely on AQE coalescing from a higher initial
+    number.
     """
+    cpus = graft_cpus()
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = cpus or 32
 
     builder = (
         SparkSession.builder.appName(app_name)

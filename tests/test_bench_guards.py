@@ -57,3 +57,20 @@ def test_stress_repeats_missing_value_is_usage_error():
         _parse_args(["--repeats"])
     assert _parse_args(["--repeats", "3", "--matrix"]).repeats == 3
     assert _parse_args(["5000000", "--lakefed"]).total_rows == 5_000_000
+
+
+def test_graft_cpus_is_the_one_parser(monkeypatch):
+    # get_spark and bench.py both size themselves from SPARK_GRAFT_CPUS
+    # through this parser: unset or empty means unset, anything but an
+    # integer >= 1 raises and names the variable
+    from finance_etl_pipeline_monthly_close_dataset_spark.session import graft_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert graft_cpus() is None
+    for value, expected in (("", None), ("  ", None), ("4", 4), (" 8 ", 8)):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+        assert graft_cpus() == expected, value
+    for value in ("abc", "0", "-2", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            graft_cpus()

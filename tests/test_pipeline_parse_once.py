@@ -12,16 +12,27 @@ pin the contracts that redesign leans on:
   dir) on success;
 * on missing FX rates, ``run_month`` must raise AND leave no curated
   fact at all (the reference's hard-error contract, now enforced by
-  rename-promotion instead of an eager pre-pass).
+  rename-promotion instead of an eager pre-pass);
+* every close outcome, in CSV and lake-fed mode, releases every cache
+  it made;
+* the close's own plans keep the shapes the stress tool asserts at
+  volume.
 """
 
 from __future__ import annotations
+
+import contextlib
+import shutil
+import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from finance_etl_pipeline_monthly_close_dataset_spark.config import Settings
 from finance_etl_pipeline_monthly_close_dataset_spark.plans import quality
+from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import DataQualityGateError
+from finance_etl_pipeline_monthly_close_dataset_spark.plans.transforms import MissingFxRatesError
 from finance_etl_pipeline_monthly_close_dataset_spark.schemas import SALES_SCHEMA
 from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import (
     RAW_PREFIX,
@@ -174,3 +185,63 @@ def test_gate_failure_still_writes_audit(spark, tmp_path, reference_month):
         )
     assert (curated / "dq_exceptions.csv").exists()
     assert not (curated / "fact_transactions.parquet").exists()
+
+
+# per close outcome: the appended sales row, the gate mode, the error
+CLOSE_OUTCOMES = {
+    "success": (None, "ERROR", None),
+    "gate_failure": (
+        "2025-12-10,TLM,INV-BAD,99999999,USD,5.0,unknown account", "ERROR", DataQualityGateError
+    ),
+    "missing_fx": ("2025-12-10,TLM,INV-XXX,40000001,XXX,5.0,no rate", "NEVER", MissingFxRatesError),
+}
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("outcome", sorted(CLOSE_OUTCOMES))
+@pytest.mark.parametrize("mode", ["csv", "lake"])
+def test_close_leaves_no_persisted_rdd(spark, tmp_path, reference_month, mode, outcome):
+    """No persisted RDD survives a close, whatever its outcome.  Compared
+    by RDD id, since the session's map of persisted RDDs holds them
+    weakly and an unrelated one may be collected meanwhile."""
+    from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import run_month
+    from finance_etl_pipeline_monthly_close_dataset_spark.sources.raw_lake import (
+        ingest_raw_to_lake,
+    )
+
+    bad_row, fail_on, expected_error = CLOSE_OUTCOMES[outcome]
+    raw = tmp_path / "raw"
+    shutil.copytree(reference_month / "raw", raw)
+    if bad_row:
+        with (raw / "sales.csv").open("a") as fh:
+            fh.write(bad_row + "\n")
+    source = {"raw_dir": raw}
+    if mode == "lake":
+        ingest_raw_to_lake(spark, "2025-12", raw, tmp_path / "lake")
+        source = {"raw_dir": None, "raw_lake_dir": tmp_path / "lake"}
+
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(expected_error) if expected_error else contextlib.nullcontext():
+        run_month(
+            spark, Settings(), month="2025-12", curated_dir=tmp_path / "curated",
+            reference_dir=reference_month / "ref", fail_on=fail_on, **source,
+        )
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert not (tmp_path / "curated" / "fact_transactions.parquet._building").exists()
+
+
+def test_close_plan_shapes(spark, reference_month):
+    """The stress tool's plan-shape checks on the close's own plans for
+    the seed-42 month: the fact plan has no hash or range Exchange, a
+    broadcast FX join and one sales.csv scan; the DQ plan has no
+    BatchEvalPython, no CartesianProduct, and one row-level sales scan."""
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from stress_pipeline import assert_plan_shapes
+
+    checks = assert_plan_shapes(
+        spark, Settings(), str(reference_month / "raw"), str(reference_month / "ref")
+    )
+    assert all(v for k, v in checks.items() if not k.endswith("_scans")), checks

@@ -11,7 +11,6 @@ from finance_etl_pipeline_monthly_close_dataset_spark.plans.quality import (
     add_severity,
     build_dataset_specs,
     collect_exceptions,
-    dq_overall_status,
     dq_summary_table,
     schema_shape_exceptions,
 )
@@ -126,14 +125,26 @@ def _exc(spark, rows):
 
 
 def test_gate_modes(spark):
-    warn_only = _exc(spark, [("sales", None, "amount", "gt", "-1", "Column", None, "WARN")])
-    with_error = _exc(spark, [("sales", None, "currency", "isin", "XXX", "Column", None, "ERROR")])
-    empty = _exc(spark, [])
-    assert dq_overall_status(empty, "ERROR") == "PASS"
-    assert dq_overall_status(warn_only, "ERROR") == "PASS"
-    assert dq_overall_status(warn_only, "WARN") == "FAIL"
-    assert dq_overall_status(with_error, "ERROR") == "FAIL"
-    assert dq_overall_status(with_error, "NEVER") == "PASS"
+    """The close's gate fails iff some dq_summary row has status FAIL."""
+    data = {
+        "empty": _exc(spark, []),
+        "warn_only": _exc(spark, [("sales", None, "amount", "gt", "-1", "Column", None, "WARN")]),
+        "with_error": _exc(spark, [("sales", None, "currency", "isin", "XXX", "Column", None, "ERROR")]),
+    }
+    expected = {
+        ("empty", "ERROR"): "PASS",
+        ("empty", "WARN"): "PASS",
+        ("empty", "NEVER"): "PASS",
+        ("warn_only", "ERROR"): "PASS",
+        ("warn_only", "WARN"): "FAIL",
+        ("warn_only", "NEVER"): "PASS",
+        ("with_error", "ERROR"): "FAIL",
+        ("with_error", "WARN"): "FAIL",
+        ("with_error", "NEVER"): "PASS",
+    }
+    for (name, fail_on), verdict in expected.items():
+        statuses = [r["status"] for r in dq_summary_table(data[name], fail_on).collect()]
+        assert ("FAIL" if "FAIL" in statuses else "PASS") == verdict, (name, fail_on)
 
 
 def test_summary_zero_filled_scaffold(spark):

@@ -888,6 +888,33 @@ def test_user_session_stats_udtf_reordered_table_columns(spark):
         assert got == expect, select
 
 
+def test_user_session_stats_udtf_rejects_unrecognised_columns(spark):
+    """Without user_id plus us or ts by name -- a single-column TABLE
+    argument, or names the handler does not know -- the UDTF raises a
+    ValueError listing the columns it received, instead of
+    StopIteration or a guess by position."""
+    import pytest
+    from pyspark.errors import PythonException
+
+    from finance_etl_pipeline_monthly_close_dataset_spark.functions.udtfs import (
+        register_udtfs,
+    )
+
+    register_udtfs(spark)
+    spark.createDataFrame([(1, 10), (1, 20)], "user_id long, t long").createOrReplaceTempView(
+        "_udtf_bad_cols_test"
+    )
+    for select, key, received in (
+        ("SELECT user_id FROM _udtf_bad_cols_test", "user_id", "['user_id']"),
+        ("SELECT user_id AS uid, t FROM _udtf_bad_cols_test", "uid", "['uid', 't']"),
+    ):
+        with pytest.raises(PythonException, match="needs columns user_id and us or ts") as err:
+            spark.sql(
+                f"SELECT * FROM user_session_stats(TABLE({select}) PARTITION BY {key})"
+            ).collect()
+        assert received in str(err.value)
+
+
 def test_broadcast_hot_keys_join_caps_dense_hot_set(spark):
     # dense-not-skewed: EVERY key exceeds the threshold; the guard must
     # refuse to build a giant literal isin and fall back to the plain

@@ -4,15 +4,19 @@ Generates a synthetic N-row month (default 10M rows across the five
 raw datasets, same schemas as the reference's seed-42 data, generated
 distributively with Spark expressions -- no driver-side loops), runs
 ``run_month`` end-to-end, times the stages that matter (DQ sweep, FX
-join + fact build, KPI pivot), and mechanically asserts the plan
-shapes that keep those stages scalable:
+join + fact build, KPI pivot), and mechanically asserts the shapes of
+the close's own plans (``plan_close``) that keep those stages scalable:
 
 * the row-level DQ sweep is ONE scan per dataset (array-of-structs +
   explode), not one scan per check -- asserted by counting csv scans
-  of sales in the exceptions plan (<= 3: row-level, unique-keys
-  groupBy, COA anti-join);
-* no Python row evaluation and no cartesian products anywhere;
-* the FX join is a BroadcastHashJoin (fact side never shuffles).
+  of sales in the exceptions plan (<= 2: row-level family and
+  unique-keys groupBy);
+* no Python row evaluation and no cartesian products in the DQ plan;
+* the fact plan scans sales once, has no hash or range exchange, and
+  joins FX by broadcast.
+
+The same checks run at golden scale in tier-1
+(tests/test_pipeline_parse_once.py).
 
 Usage: python tools/stress_pipeline.py [total_rows] [--keep] [--skew]
     [--verify] [--lake] [--lakefed] [--repeats N] [--matrix]
@@ -39,8 +43,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from finance_etl_pipeline_monthly_close_dataset_spark import sample_data  # noqa: E402
 from finance_etl_pipeline_monthly_close_dataset_spark.config import Settings  # noqa: E402
-from finance_etl_pipeline_monthly_close_dataset_spark.plans import quality  # noqa: E402
 from finance_etl_pipeline_monthly_close_dataset_spark.plans.pipeline import (  # noqa: E402
+    plan_close,
     plan_has_month_partition_filter,
     run_month,
 )
@@ -178,83 +182,33 @@ def _plan(df) -> str:
 
 
 def assert_plan_shapes(spark, settings, raw_dir: str, ref_dir: str) -> dict:
-    """Mechanical plan checks on the DQ exception path and the fact
-    build, using the same builders run_month composes."""
-    from finance_etl_pipeline_monthly_close_dataset_spark.schemas import (
-        COA_SCHEMA, EXPENSES_SCHEMA, INVENTORY_SCHEMA, PAYROLL_SCHEMA,
-        SALES_SCHEMA,
-    )
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import (
-        read_csv, read_csv_typed,
-    )
-    from finance_etl_pipeline_monthly_close_dataset_spark.plans.transforms import (
-        build_dim_accounts, fx_to_base, to_fact_transactions,
-    )
-    from finance_etl_pipeline_monthly_close_dataset_spark.schemas import FX_SCHEMA
-    from finance_etl_pipeline_monthly_close_dataset_spark.sources.readers import ROW_ID_COL
-
-    coa = read_csv(spark, os.path.join(ref_dir, "chart_of_accounts.csv"), COA_SCHEMA)
-    dim = build_dim_accounts(coa)
-    frames = {
-        "sales": read_csv_typed(spark, os.path.join(raw_dir, "sales.csv"), SALES_SCHEMA, with_row_id=True),
-        "expenses": read_csv_typed(spark, os.path.join(raw_dir, "expenses.csv"), EXPENSES_SCHEMA, with_row_id=True),
-        "payroll": read_csv_typed(spark, os.path.join(raw_dir, "payroll.csv"), PAYROLL_SCHEMA, with_row_id=True),
-        "inventory_movements": read_csv_typed(
-            spark, os.path.join(raw_dir, "inventory_movements.csv"), INVENTORY_SCHEMA, with_row_id=True
-        ),
-        "fx_rates": read_csv_typed(spark, os.path.join(raw_dir, "fx_rates.csv"), FX_SCHEMA, with_row_id=True),
-    }
-    specs = quality.build_dataset_specs(("USD", "TZS", "EUR"), "USD")
-    # mirror run_month (r11): COA membership is FUSED into the
-    # row-level family as a literal-set check, not a separate anti-join
-    coa_codes = [r[0] for r in dim.select(F.col("account_code").cast("string")).collect()]
-    for name in ("sales", "expenses"):
-        specs[name].checks.append(quality.coa_membership_check(coa_codes))
-
-    # DQ exception path: union of per-dataset exception plans
-    exc = None
-    for name, df in frames.items():
-        part = quality.collect_exceptions(df, specs[name])
-        exc = part if exc is None else exc.unionByName(part)
-    exc_plan = _plan(quality.add_severity(exc))
+    """Mechanical plan checks on the close's own plans: ``plan_close``
+    in CSV mode, its caches released before returning."""
+    plan = plan_close(spark, settings, MONTH, raw_dir, ref_dir)
+    try:
+        exc_plan = _plan(plan.dq_exceptions)
+        fact_plan = _plan(plan.fact)
+    finally:
+        for df in plan.persisted:
+            df.unpersist()
 
     checks = {}
     checks["dq_no_python_eval"] = "BatchEvalPython" not in exc_plan
     checks["dq_no_cartesian"] = "CartesianProduct" not in exc_plan
-    # sales has 6 not_null + 2 row checks + fused COA + 1 unique key:
-    # everything row-level MUST share one scan -> at most 2 sales scans
-    # (row-level family + uniqueness group-by)
+    # every row-level sales check (not_null, isin, range, fused COA)
+    # shares one scan: at most 2 sales scans (row-level family +
+    # uniqueness group-by)
     n_sales_scans = exc_plan.count("sales.csv")
     checks["dq_sales_scans"] = n_sales_scans
     checks["dq_one_scan_rowlevel"] = n_sales_scans <= 2
-
-    # mirror run_month (r12): the fact builds from the checked slices
-    # with the eager missing-FX pass deferred to the write's
-    # Observation, so its plan must be SINGLE-PASS -- exactly one scan
-    # of each source -- plus the r10 invariants (broadcast FX, no
-    # shuffle exchange)
-    fx = fx_to_base(frames["fx_rates"].drop(ROW_ID_COL), "USD")
-    fact = to_fact_transactions(
-        quality.checked_slice(frames["sales"], specs["sales"]).drop(ROW_ID_COL),
-        quality.checked_slice(frames["expenses"], specs["expenses"]).drop(ROW_ID_COL),
-        quality.checked_slice(frames["payroll"], specs["payroll"]).drop(ROW_ID_COL),
-        quality.checked_slice(
-            frames["inventory_movements"], specs["inventory_movements"]
-        ).drop(ROW_ID_COL),
-        fx,
-        "USD",
-        check_missing_rates=False,
-    )
-    fact_plan = _plan(fact)
     checks["fx_join_broadcast"] = "BroadcastHashJoin" in fact_plan
-    # r10: the fact build must be a pure map pipeline -- no hash OR
-    # range exchange (the curated write no longer sorts; file-order
-    # boundaries re-sort themselves)
+    # the fact build is a pure map pipeline: no hash OR range exchange
+    # (the curated write does not sort; file-order boundaries re-sort)
     checks["fact_no_shuffle_exchange"] = (
         "Exchange hashpartitioning" not in fact_plan
         and "Exchange rangepartitioning" not in fact_plan
     )
-    # r12: single-pass fact -- one scan per source in the write plan
+    # single-pass fact: one scan per source in the write plan
     checks["fact_single_sales_scan"] = fact_plan.count("sales.csv") == 1
     return checks
 
